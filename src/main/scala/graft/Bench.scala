@@ -131,11 +131,6 @@ object Bench {
     // mirroring Verify's: lets scale checks time a named family without
     // paying the full surface at 100x
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
-    // bisect hooks (dev-only, unset in driver runs): WARMALL builds every
-    // fixture even under a subset filter (isolates resident-state cost);
-    // ARM installs the catalog + optimizer extras without touching any
-    // manifest fixture (isolates plan-time cost of the armed extras)
-    val warmAll = sys.env.contains("SPARK_GRAFT_WARMALL")
     var failed = List.empty[String]
     val w0 = System.nanoTime()
     // ---- warm-up: one-time fixture/cache builds, UNTIMED per-query but
@@ -153,10 +148,8 @@ object Bench {
     // that nearly every later fixture reads, and racing N builders on a
     // cold memo would compute the whole ETL chain N times.
     // Pool size derives from the core count (1 per 2 cores, max 16), so the
-    // driver's low-core scaling runs degrade gracefully to sequential;
-    // SPARK_GRAFT_SEQWARMUP forces the old sequential order for bisection.
-    val warmupSelected =
-      warmupQueries.filter(n => warmAll || only.forall(_.contains(n)))
+    // driver's low-core scaling runs degrade gracefully to sequential.
+    val warmupSelected = warmupQueries.filter(n => only.forall(_.contains(n)))
     def warmOne(s: SparkSession, name: String): Unit = {
       val t0 = System.nanoTime()
       try SparkEntry.queries(name)(s, sfDir).count()
@@ -177,17 +170,13 @@ object Bench {
     // the first blocks the rest, and workers whose entries don't touch
     // the Warehouse (media, embeddings, events fixtures) fill the cores
     // the old serial phase left idle (~20 s of the warm-up wall, measured
-    // r19). SPARK_GRAFT_WARMPAR is a dev-only width override for pool
-    // tuning experiments; driver runs never set it.
+    // r19).
     // Width cpus/2 capped at 16: the builds are commit-latency-bound, not
     // CPU-bound, so 8 workers left 32 cores queue-limited — measured cold
     // at 32 cores: width 8 = 133 s, 16 = 65 s, 32 = 76 s (contention), so
     // half the cores is the knee; low-core scaling runs keep degrading
     // gracefully (8 cores -> 4 workers, 2 cores -> sequential).
-    val warmPar =
-      if (sys.env.contains("SPARK_GRAFT_SEQWARMUP")) 1
-      else sys.env.get("SPARK_GRAFT_WARMPAR").map(_.toInt)
-        .getOrElse(math.max(1, math.min(16, cpus.toInt / 2)))
+    val warmPar = math.max(1, math.min(16, cpus.toInt / 2))
     if (warmPar <= 1) warmupSelected.foreach(warmOne(spark, _))
     else {
       val pool = java.util.concurrent.Executors.newFixedThreadPool(warmPar)
@@ -203,16 +192,6 @@ object Bench {
       } finally pool.shutdown()
     }
     val warmupSec = (System.nanoTime() - w0) / 1e9
-    if (sys.env.contains("SPARK_GRAFT_ARM")) {
-      spark.conf.set("spark.sql.catalog.graft",
-        "graft.sources.manifest.ManifestCatalog")
-      org.apache.spark.sql.graft.ManifestInsertStrategy.install(spark)
-      // touching the catalog instantiates it, which installs
-      // ManifestCountRule — the exact state a full run reaches
-      try spark.sql("SHOW NAMESPACES IN graft").count()
-      catch { case e: Throwable =>
-        System.err.println(s"[bench] ARM catalog touch: ${e.getMessage}") }
-    }
     // attribution diagnostics (stderr — never part of the JSON contract):
     // resident cached blocks and cumulative JVM GC time bracket the timed
     // pass, separating "plans got slower" from "the session pays GC rent"

@@ -3874,18 +3874,10 @@ object Manifests {
 
   def changesBetween(spark: SparkSession, base: String,
       from: Int, to: Int): DataFrame = {
-    val __t0 = System.nanoTime(); def __lap(tag: String, since: Long): Long = {
-      val n = System.nanoTime()
-      if (sys.env.contains("GRAFT_CB_PROF"))
-        System.err.println(f"[cbprof] $tag%-16s ${(n - since) / 1e6}%8.2f ms")
-      n
-    }
     val fa = files(spark, base, from).map(Dfs.canonical)
     val fb = files(spark, base, to).map(Dfs.canonical)
-    val __t1 = __lap("files", __t0)
     val dvA = dvFiles(spark, base, from)
     val dvB = dvFiles(spark, base, to)
-    val __t2 = __lap("dvFiles", __t1)
     val onlyA = fa.filterNot(fb.toSet)
     val onlyB = fb.filterNot(fa.toSet)
     val shared = fa.toSet.intersect(fb.toSet)
@@ -3910,7 +3902,6 @@ object Manifests {
             .filter(x => x.v == ev && x.from == f && x.to == t)
             .flatMap(_.preFiles)).distinct)
       }.sortBy(_.v)
-    val __t3 = __lap("renames", __t2)
     val renamedInRange = renames.exists(e => e.v > from && e.v <= to)
     // both sides read under the UNION schema so an evolution commit
     // diffs cleanly: an old row's null-filled image on one side equals
@@ -3925,7 +3916,6 @@ object Manifests {
       case (a, b) => a.orElse(b)
         .getOrElse(spark.read.parquet(fa.head).schema) // one footer read
     }
-    val __t4 = __lap("schema", __t3)
     def empty = spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
     // each side's unique files read under ITS version's vectors, so a
@@ -3948,7 +3938,6 @@ object Manifests {
     // boundary files, not the rewrite's whole footprint.
     val (aOv, aDis, bOv, bDis) =
       overlapPartition(spark, base, from, to, onlyA, onlyB)
-    val __t5 = __lap("overlap", __t4)
     // the two directions of the content diff share one cancellation
     // structure: for each distinct row value with na copies on the
     // from-side and nb on the to-side, min(na, nb) cancel — deletes
@@ -4024,7 +4013,6 @@ object Manifests {
         // flip a sign either, so the one-sided shapes skip the netting
         // entirely (bitmap set() is idempotent, the semi-join is a set
         // probe); only the genuinely two-sided shape cancels.
-        val __d0 = System.nanoTime()
         val oneSided = dvAu.isEmpty || dvBu.isEmpty
         // SMALL churn — total delta-sidecar positions certified by
         // parquet footer metadata (exact row counts, no data read) to
@@ -4039,7 +4027,6 @@ object Manifests {
           (dvAu ++ dvBu).foldLeft(Option(0L)) { (acc, p) =>
             acc.flatMap(a => Dfs.parquetRecords(spark, p).map(a + _))
           }
-        val __df = __lap("dv:footers", __d0)
         val localNet: Option[Map[(Int, String), Seq[Long]]] =
           dvRecs.filter(r => r > 0L && r <= maxIdxBytes / 64).map { _ =>
             if (oneSided) {
@@ -4089,14 +4076,12 @@ object Manifests {
               .filter(col("__imb") =!= 0L)
               .persist()
         }
-        val __d1 = __lap("dv:compose", __df)
         try {
           // one stats pass + one collect build BOTH directions'
           // touched-file lists and bitmap probes (vs a per-direction
           // distinct collect plus dvMembershipColumn's two collects);
           // ZERO jobs when the driver-side cancellation ran
           val churn = dvChurnIndex(spark, imb, local = localNet)
-          val __d2 = __lap("dv:churnIdx", __d1)
           def rowsAt(dir: Int): DataFrame = churn.get(dir) match {
             case None => empty
             case Some((touchedAll, probe)) =>
@@ -4120,19 +4105,14 @@ object Manifests {
                 }
               }
           }
-          val __rr = (rowsAt(1), rowsAt(-1))
-          __lap("dv:rowsAt", __d2)
-          __rr
+          (rowsAt(1), rowsAt(-1))
         } finally { imb.unpersist(); () }
       }
-    val __t6 = __lap("sides+dv", __t5)
-    val __r = fileInserts.unionByName(dvInserts)
+    fileInserts.unionByName(dvInserts)
       .withColumn("_change_type", lit("insert"))
       .unionByName(
         fileDeletes.unionByName(dvDeletes)
           .withColumn("_change_type", lit("delete")))
-    __lap("union", __t6); __lap("TOTAL", __t0)
-    __r
   }
 
   /** [[changesBetween]] with provenance where attribution is

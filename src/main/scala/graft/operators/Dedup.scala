@@ -239,9 +239,8 @@ object Dedup {
   }
 
   /** (band_idx, band_hash, bucket_n) census of the LSH buckets — the
-    * relation [[lshCandidates]] caps on, exposed for cap-hit telemetry
-    * (PairBench): the dropped-bucket fraction is the signal that the band
-    * code space must grow with the corpus. */
+    * relation [[lshCandidates]] caps on: the dropped-bucket fraction is
+    * the signal that the band code space must grow with the corpus. */
   def lshBucketSizes(sigs: DataFrame): DataFrame =
     bandedOf(sigs).groupBy("band_idx", "band_hash").agg(count(lit(1)).as("bucket_n"))
 

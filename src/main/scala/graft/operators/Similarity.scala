@@ -179,7 +179,7 @@ object Similarity {
     * 100× decade check measured every 4-bit bucket blowing the population
     * cap at 500k vectors (0 output), while wider codes restored the
     * family. Registered queries pick the width via [[adaptiveBits]];
-    * PairBench drives this variant for width sweeps. */
+    * an explicit width serves width sweeps ([[embeddingNearDupsAt]]). */
   def codesAt(emb: DataFrame, bits: Int, tables: Int = nTables): DataFrame = {
     val planes = hyperplanesAt(bits, tables)
     val tableCols = (0 until tables).map { t =>
@@ -537,8 +537,8 @@ object Similarity {
     }
 
   /** [[embeddingNearDups]] at an arbitrary code width (see [[codesAt]]) —
-    * the corpus-scaled variant PairBench measures; not registered, so the
-    * 4-bit oracle replay is untouched. */
+    * the corpus-scaled variant; not registered, so the 4-bit oracle replay
+    * is untouched. */
   def embeddingNearDupsAt(spark: SparkSession, dir: String, bits: Int,
       minCosine: Double = 0.25): DataFrame =
     scoredPairsFromCodes(spark, dir,
@@ -595,13 +595,6 @@ object Similarity {
     graft.functions.Memo(spark, dir, s"hyperplane_codes_${bits}b")(
       codesAt(Tables.embeddings(spark, dir).select("vec_id", "embedding"), bits))
   }
-
-  /** (table, code, bucket_n) census of the hyperplane-LSH buckets at the
-    * registered (adaptive) width — cap-hit telemetry for
-    * [[embeddingNearDups]] (PairBench); the same census the shed guard
-    * aggregates. */
-  def codeBucketSizes(spark: SparkSession, dir: String): DataFrame =
-    corpusCodes(spark, dir).groupBy("table", "code").agg(count(lit(1)).as("bucket_n"))
 
   private val codeIndexDirs =
     scala.collection.concurrent.TrieMap.empty[(String, String), String]
@@ -1007,9 +1000,7 @@ object Similarity {
     * over the cap after the deepest split keep their members unverified —
     * counted as shed, throwing past [[maxShedFraction]]. The domination
     * rule is transitive-chain aggressive (B dropped by A can still drop
-    * C) — exactly the one-shot within-cluster pass SemDeDup makes. Decade
-    * evidence: PairBench runs this at 100× next to the other pair
-    * families. */
+    * C) — exactly the one-shot within-cluster pass SemDeDup makes. */
   def semanticDedup(spark: SparkSession, dir: String,
       minCosine: Double = 0.9): DataFrame =
     semanticDedupAt(spark, dir, semClusters(corpusSize(spark, dir)), minCosine)
@@ -1062,8 +1053,7 @@ object Similarity {
     * all correlate with the centroid direction, so they agree on most
     * global signs — measured 57/120 planted-copy detections); the
     * RESIDUAL sign is near-balanced around the mean, and an exact copy
-    * still matches its original on every bit against any threshold.
-    * Shared by [[semanticDedupAt]] and the PairBench census. */
+    * still matches its original on every bit against any threshold. */
   private def semCells(spark: SparkSession, dir: String, k: Int,
       cap: Long = maxClusterPop): DataFrame = {
     graft.functions.VectorExprs.register(spark)
@@ -1147,14 +1137,6 @@ object Similarity {
           "silently read as 'no duplicates'. Raise k explicitly via " +
           "semanticDedupAt, or widen maxSemK/targetClusterPop/maxSubBits.")
   }
-
-  /** Cell-population census at the corpus-adaptive k — PairBench's
-    * cap-telemetry hook ("dropped" there = cells the deepest split could
-    * not bring under the cap), reading the same memoized assignments the
-    * timed query filled. */
-  def semClusterSizes(spark: SparkSession, dir: String): DataFrame =
-    semCells(spark, dir, semClusters(corpusSize(spark, dir)))
-      .groupBy("cluster", "sub").agg(count(lit(1)).as("cluster_n"))
 
   /** DuckDB replay of [[semanticDedup]] — the adaptive-k CASE ladder, the
     * full Lloyd chain at that k, the per-cluster split-width ladder, the

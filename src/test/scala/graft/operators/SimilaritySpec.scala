@@ -400,6 +400,26 @@ class SimilaritySpec extends AnyFunSuite {
       s"sign-bit splitting must keep most copy pairs co-celled; caught ${dropped.size}/120")
   }
 
+  test("semanticDedup: cells no split can shrink trip the shed guard instead of reading as 'no duplicates'") {
+    import org.apache.spark.sql.functions._
+    // a corpus that is mostly EXACT copies of one vector: identical
+    // vectors share every sign bit, so the deepest split leaves them in
+    // one cell far over the cap — more than half the corpus is shed and
+    // the operator must throw
+    val dir = java.nio.file.Files.createTempDirectory("graft_semshed").toString
+    val emb = graft.Tables.embeddings(spark, sf).select("vec_id", "embedding")
+    val copy = emb.filter(col("vec_id") === 0L).select("embedding")
+    val copies = spark.range(300).select((col("id") + 1000000L).as("vec_id"))
+      .crossJoin(copy)
+    emb.filter(col("vec_id") < 40).unionByName(copies).repartition(4)
+      .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
+    val k = Similarity.semClusters(340L)
+    val e = intercept[IllegalStateException] {
+      Similarity.semanticDedupWith(spark, dir, k, 0.9, cap = 12L).count()
+    }
+    assert(e.getMessage.contains("semantic dedup is load-shedding"), e.getMessage)
+  }
+
   test("VecArgmin equals the greatest(struct(dot - c2/2, cid)) encoding, ties and all") {
     val spark0 = spark
     import spark0.implicits._
